@@ -144,14 +144,13 @@ case class LshSigExpr(child: Expression, nBits: Int, jOffset: Int = 0)
 
 object LongArrayDot {
   /** Register `graft_dot(a, b)` and `graft_lshsig(q, nBits)` in the
-    * session's function registry (idempotent). */
+    * session's function registry, once per session (see
+    * TextNative.register). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => LongArrayDot(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lshsig", exprs => LshSigExpr(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int],
-        if (exprs.length > 2) exprs(2).eval(null).asInstanceOf[Int] else 0),
-      "scala_udf")
+    TextNative.registerOnce(spark, "graft_dot")(exprs =>
+      LongArrayDot(exprs(0), exprs(1)))
+    TextNative.registerOnce(spark, "graft_lshsig")(exprs =>
+      LshSigExpr(exprs(0), exprs(1).eval(null).asInstanceOf[Int],
+        if (exprs.length > 2) exprs(2).eval(null).asInstanceOf[Int] else 0))
   }
 }

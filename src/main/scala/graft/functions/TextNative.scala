@@ -65,28 +65,36 @@ object TextNative {
     toHex(md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
   }
 
+  /** Register graft's text functions in the session's function
+    * registry, once per session: a name the registry already holds
+    * (an earlier call, or GraftExtensions) is left alone, so operators
+    * may call this on every use without re-creating the functions (each
+    * re-creation logs a "replaced a previously registered function"
+    * WARN). */
   def register(spark: SparkSession): Unit = {
+    registerOnce(spark, "graft_tokens")(exprs => TokensExpr(exprs.head))
+    registerOnce(spark, "graft_minhash")(exprs => MinHashSigExpr(exprs(0),
+      exprs(1).eval(null).asInstanceOf[Int]))
+    registerOnce(spark, "graft_rollhash")(exprs =>
+      RollingHashExpr(exprs.head))
+    registerOnce(spark, "graft_ngrams")(exprs => NgramsExpr(exprs(0),
+      exprs(1).eval(null).asInstanceOf[Int]))
+    registerOnce(spark, "graft_winnow")(exprs => WinnowExpr(exprs(0),
+      exprs(1).eval(null).asInstanceOf[Int]))
+    registerOnce(spark, "graft_shingles")(exprs => ShinglesExpr(exprs.head))
+    registerOnce(spark, "graft_simhash")(exprs => SimHashExpr(exprs(0),
+      exprs(1).eval(null).asInstanceOf[Int]))
+    registerOnce(spark, "graft_bpe")(exprs =>
+      BpeApplyExpr(exprs(0), exprs(1)))
+  }
+
+  /** Create temp function `name` unless the session already has it. */
+  private[functions] def registerOnce(spark: SparkSession, name: String)(
+      builder: Seq[Expression] => Expression): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_tokens",
-      exprs => TokensExpr(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_minhash",
-      exprs => MinHashSigExpr(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_rollhash",
-      exprs => RollingHashExpr(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_ngrams",
-      exprs => NgramsExpr(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_winnow",
-      exprs => WinnowExpr(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_shingles",
-      exprs => ShinglesExpr(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      exprs => SimHashExpr(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_bpe",
-      exprs => BpeApplyExpr(exprs(0), exprs(1)), "scala_udf")
+    if (!reg.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
   }
 
   /** BPE merge application — the pinned semantics `graft_bpe` and the

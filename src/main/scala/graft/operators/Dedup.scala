@@ -355,8 +355,7 @@ object Dedup {
     * recomputing beats carrying a shingle array per doc through the
     * shuffle. */
   private def verifyJaccard(cand0: DataFrame, df: DataFrame, idCol: String,
-      textCol: String, threshold: Double,
-      oneShot: Boolean = true): DataFrame = {
+      textCol: String, threshold: Double): DataFrame = {
     // r18 (guide §1.2/§5, the q85 plan-weight item): the candidate pair
     // table is referenced THREE times below (both candIds legs + the
     // pair join), so the whole collision-join subtree above it used to
@@ -365,10 +364,9 @@ object Dedup {
     // q85's cost is exactly that planning + per-reference broadcast
     // builds (JobProbe). One eager lineage cut (id pairs only — a
     // vanishing fraction of the corpus) makes every reference a
-    // LogicalRDD scan. Loop callers (IngestStream via incrementalPairs'
-    // reuseBands) skip it: a cut per micro-batch would pin one
-    // checkpoint RDD per batch — the documented per-batch-leak posture.
-    val cand = if (oneShot) cut(cand0) else cand0
+    // LogicalRDD scan. Loop callers take the same cut inside a
+    // [[releasing]] scope, which frees it when their micro-batch ends.
+    val cand = cut(cand0)
     val candIds = cand.select(col("ida").as(idCol))
       .union(cand.select(col("idb").as(idCol))).distinct()
     // cache() the candidate shingle sets: the pair join below references
@@ -377,10 +375,11 @@ object Dedup {
     // them re-ran once per side, i.e. the candidate docs were shingled
     // twice (guide §1.2). Candidates are a vanishing fraction of the
     // corpus, so the cache is small; MEMORY_AND_DISK (cache default)
-    // spills rather than OOMs, and callers reclaim via clearCache as
-    // with [[minhashPairs]]'s signature cache.
-    val sets = withShingles(df.join(candIds, idCol), textCol)
-      .select(col(idCol), col("shset")).cache()
+    // spills rather than OOMs. Inside a [[releasing]] scope it is
+    // unpersisted when the scope exits; outside one, callers reclaim it
+    // via clearCache as with [[minhashPairs]]'s signature cache.
+    val sets = pin(withShingles(df.join(candIds, idCol), textCol)
+      .select(col(idCol), col("shset")).cache())
     val sa = sets.select(col(idCol).as("ida"), col("shset").as("seta"))
     val sb = sets.select(col(idCol).as("idb"), col("shset").as("setb"))
     cand.join(sa, "ida").join(sb, "idb")
@@ -479,12 +478,14 @@ object Dedup {
     * [[minhashPairs]] over (corpus ∪ batch) restricted to pairs with
     * at least one batch member. */
   /** `reuseBands`: pass a caller-materialized [[bandTable]] of the
-    * batch to control its storage lifecycle (unpersist after the
-    * result is consumed) and share it with other per-batch work — the
-    * default computes and cache()s one internally, which outlives the
-    * call like [[minhashPairs]]'s signature cache (documented
-    * caller-reclaim contract); a long-lived loop calling this per
-    * batch MUST pass its own. */
+    * batch to share it with other per-batch work — the default
+    * computes and cache()s one internally. Every frame this call pins
+    * (that band cache, the eager cuts of the union sizes, the truncated
+    * batch bands and the candidate pairs, and the verify cache) is
+    * registered with the innermost open [[releasing]] scope, so a loop
+    * that wraps each micro-batch in one leaves nothing behind. Outside
+    * a scope they outlive the call like [[minhashPairs]]'s signature
+    * cache (documented caller-reclaim contract). */
   def incrementalPairs(batch: DataFrame, bandIndexTable: String,
       verifySource: DataFrame, idCol: String, textCol: String,
       k: Int = AdaptiveMinhash, rows: Int = AdaptiveMinhash,
@@ -500,7 +501,7 @@ object Dedup {
     val corpusBands = spark.table(bandIndexTable)
     // batch bands: computed once, tiny relative to the corpus
     val batchBands = reuseBands.getOrElse(
-      bandTable(batch, idCol, textCol, kk, rr).cache())
+      pin(bandTable(batch, idCol, textCol, kk, rr).cache()))
     // Union (corpus + batch) bucket sizes, but ONLY for batch-touched
     // buckets — untouched buckets can't produce a batch-touching pair,
     // and restricting keeps the size table batch-sized (so it
@@ -532,46 +533,28 @@ object Dedup {
        })
         .join(hinted(touched), Seq("bi", "bv"), "left_semi")
         .groupBy("bi", "bv").agg(sum("graft_bsz").as("graft_csz"))
-    // cache() (one-shot callers only): the union size table is
-    // referenced by BOTH truncated sides and each side twice again
-    // downstream — uncached, the final probe plan re-expanded this
-    // subtree ~13 times (15 scans of `_sizes` + as many broadcast
-    // builds in plans/r17/q85_incremental_dedup_before.txt), and at
-    // sf0.1 q85's cost is exactly that driver-side planning, not task
-    // time (JobProbe): measured 4.78 → 3.70 s. The table is
-    // batch-sized by construction (batch-touched keys only);
-    // MEMORY_AND_DISK, caller-reclaimed via clearCache like
-    // [[minhashPairs]]' signature cache (guide §1.2 / §5: don't
-    // compute — or plan — the same thing many times). Loop callers
-    // (q193 / IngestStream, signalled by `reuseBands`) skip the
-    // internal cache: they manage per-batch storage themselves and a
-    // handle-less cache would accumulate one entry per micro-batch —
-    // exactly the per-batch leak IngestStream.processBatch documents
-    // itself to be free of.
-    val unionSizesPlan = batchSizes
+    // The union size table is referenced by BOTH truncated sides and
+    // each side twice again downstream — unmaterialized, the final probe
+    // plan re-expanded this subtree ~13 times (15 scans of `_sizes` + as
+    // many broadcast builds in plans/r17/q85_incremental_dedup_before.txt),
+    // and the probe's cost was that driver-side planning, not task time
+    // (JobProbe). An eager lineage CUT, not a cache(): a cached subtree
+    // is still printed and planned at every reference (InMemoryRelation
+    // carries its child plan), a cut is a batch-sized LogicalRDD (guide
+    // §1.2 / §5: don't compute — or plan — the same thing many times).
+    // Loop callers take it inside a [[releasing]] scope, which frees it
+    // when their micro-batch ends.
+    val unionSizes = hinted(cut(batchSizes
       .join(corpusSizes, Seq("bi", "bv"), "left_outer")
       .select(col("bi"), col("bv"),
         (col("graft_nsz") + coalesce(col("graft_csz"), lit(0L)))
-          .as("graft_bsz"))
-    // r18: the one-shot cache() became an eager lineage CUT — the r17
-    // cache stopped recomputation, but every one of the ~13 downstream
-    // references still PRINTED and PLANNED the full cached subtree
-    // (InMemoryRelation carries its child plan), leaving q85's probe
-    // plan at 1,797 lines / 17 `_sizes` scans and its cost in planning
-    // + per-reference broadcast builds (JobProbe). A localCheckpoint is
-    // the same batch-sized materialization with the subtree replaced by
-    // a LogicalRDD everywhere. Same loop-caller carve-out as before
-    // (reuseBands => no internal storage pinned per micro-batch).
-    val unionSizes = hinted(
-      if (reuseBands.isEmpty) cut(unionSizesPlan) else unionSizesPlan)
+          .as("graft_bsz"))))
     val truncCorpus =
       truncateBandsWith(corpusBands, unionSizes, idCol, bucketCap)
     // truncBatch is referenced twice (vsCorpus' second leg + vsBatch) —
-    // cut it too on the one-shot path; batch-sized by construction.
-    val truncBatch0 =
-      truncateBandsWith(batchBands, unionSizes, idCol, bucketCap)
+    // cut it too; batch-sized by construction.
     val truncBatch =
-      if (reuseBands.isEmpty) cut(truncBatch0) else truncBatch0
+      cut(truncateBandsWith(batchBands, unionSizes, idCol, bucketCap))
     // The one-shot law's x<y join truncates the LARGER-id side, so a
     // pair survives iff its larger id is a representative — the
     // corpus-vs-batch candidates split by id order (corpus-larger
@@ -594,8 +577,7 @@ object Dedup {
           col(s"x.$idCol") < col(s"y.$idCol"))
       .select(col(s"x.$idCol").as("ida"), col(s"y.$idCol").as("idb"))
     val cand = vsCorpus.union(vsBatch).distinct()
-    verifyJaccard(cand, verifySource, idCol, textCol, threshold,
-      oneShot = reuseBands.isEmpty)
+    verifyJaccard(cand, verifySource, idCol, textCol, threshold)
   }
 
   /** LSH band-configuration tuning audit: for each candidate (bands ×
@@ -798,11 +780,42 @@ object Dedup {
     * dynamic allocation / decommissioning, e.g. `Graft.elasticity` — a
     * retired executor takes localCheckpoint blocks with it and a
     * truncated lineage has no recompute path); `localCheckpoint`
-    * otherwise (fixed-executor and local runs). */
-  private[operators] def cut(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+    * otherwise (fixed-executor and local runs). Inside a [[releasing]]
+    * scope the cut is registered with it and released at scope exit. */
+  private[graft] def cut(df: DataFrame): DataFrame =
+    pin(if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
+    else df.localCheckpoint(eager = true))
+
+  /** Open [[releasing]] scopes of this thread, innermost first. */
+  private val scopes =
+    ThreadLocal.withInitial[List[collection.mutable.ArrayBuffer[DataFrame]]](
+      () => Nil)
+
+  /** Register `df` (a cut or a cache()d frame) with the innermost open
+    * [[releasing]] scope; outside any scope, a no-op. Returns `df`. */
+  private[graft] def pin(df: DataFrame): DataFrame = {
+    scopes.get.headOption.foreach(_ += df)
+    df
+  }
+
+  /** Run `body` as one unit of per-batch work — a streaming
+    * micro-batch — and [[release]] every frame [[pin]]ned inside it
+    * (every [[cut]], the verify cache, caller-registered frames) when
+    * it exits, normally or not. Frames pinned in the scope must not be
+    * read after it: a released local checkpoint has no recompute path.
+    * Scopes nest; a frame belongs to the innermost one. Outside any
+    * scope nothing is registered, so one-shot operators keep their
+    * documented caller-reclaim contract. */
+  def releasing[T](body: => T): T = {
+    val pinned = collection.mutable.ArrayBuffer.empty[DataFrame]
+    scopes.set(pinned :: scopes.get)
+    try body
+    finally {
+      scopes.set(scopes.get.tail)
+      pinned.foreach(release)
+    }
+  }
 
   /** Free a checkpointed frame's storage NOW (Dataset.unpersist is a
     * no-op for checkpoint blocks — they live at the RDD layer, not in

@@ -723,8 +723,12 @@ object EventStreams {
       "graft_q193_pairs")
     runStagedStream(spark, "graft_q193",
       batchDocs.select("doc_id", "text", "lang", "source", "n_chars"),
-      docSchema, maxFilesPerTrigger, deltaFiles, (mb, _) => {
-        val bands = Dedup.bandTable(mb, "doc_id", "text", k, rows).cache()
+      docSchema, maxFilesPerTrigger, deltaFiles,
+      // one releasing scope per micro-batch: the band cache and both
+      // probes' cuts and verify caches are freed when the batch ends
+      (mb, _) => Dedup.releasing {
+        val bands =
+          Dedup.pin(Dedup.bandTable(mb, "doc_id", "text", k, rows).cache())
         val vsIndex = Dedup.incrementalPairs(mb, "graft_band_index_q193",
           all, "doc_id", "text", k, rows, thr, reuseBands = Some(bands))
         val vsEarlier = Dedup.incrementalPairs(mb, "graft_q193_batch_bands",
@@ -734,8 +738,6 @@ object EventStreams {
           .saveAsTable("graft_q193_pairs")
         bands.write.mode("append").format("parquet")
           .saveAsTable("graft_q193_batch_bands")
-        bands.unpersist()
-        ()
       })
     Dedup.admitBatch(batchDocs,
       spark.table("graft_q193_pairs").dropDuplicates("ida", "idb"), "doc_id")

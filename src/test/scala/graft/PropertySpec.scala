@@ -73,6 +73,43 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
+  test("incremental admission is the same inside a releasing scope and outside") {
+    val words = Gen.oneOf((0 until 40).map(i => s"w$i"))
+    val doc = Gen.listOfN(15, words)
+    for (texts <- samples(Gen.listOfN(50, doc), 1)) {
+      val corpus = texts.take(30).zipWithIndex
+        .map { case (t, i) => (i.toLong, t.mkString(" ")) }
+        .toDF("doc_id", "text")
+      // batch j: a near-dup of corpus doc j (j % 3 == 0), of batch doc
+      // j - 1 (j % 3 == 1), or a fresh doc (j % 3 == 2, the only admits)
+      val batchTexts = (0 until 20).foldLeft(Vector.empty[List[String]]) {
+        (acc, j) => acc :+ (j % 3 match {
+          case 0 => texts(j).init :+ "edited"
+          case 1 => "alt" :: acc(j - 1).tail
+          case _ => texts(30 + j)
+        })
+      }
+      val batch = batchTexts.zipWithIndex
+        .map { case (t, j) => (100L + j, t.mkString(" ")) }
+        .toDF("doc_id", "text")
+      Dedup.writeBandIndex(corpus, "doc_id", "text", "prop_scope_idx",
+        k = 8, rows = 2, nBuckets = 4)
+      def admitted(): Set[Long] = {
+        val bands =
+          Dedup.pin(Dedup.bandTable(batch, "doc_id", "text", 8, 2).cache())
+        val pairs = Dedup.incrementalPairs(batch, "prop_scope_idx",
+          corpus.unionByName(batch), "doc_id", "text", 8, 2, 0.5,
+          reuseBands = Some(bands))
+        Dedup.admitBatch(batch, pairs, "doc_id").select("doc_id")
+          .as[Long].collect().toSet
+      }
+      val outside = admitted()
+      val inside = Dedup.releasing(admitted())
+      assert(inside == outside)
+      assert(inside == (0 until 20).filter(_ % 3 == 2).map(100L + _).toSet)
+    }
+  }
+
   test("hash split/sample: deterministic, partition-invariant, ratio-sane") {
     val ids = spark.range(0, 4000).toDF("id")
     val s1 = operators.Sampling.hashSplit(ids, "id", 13)

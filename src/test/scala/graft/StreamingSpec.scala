@@ -292,6 +292,58 @@ class StreamingSpec extends SparkTestBase {
       "compaction must rebuild _sizes to the fresh physical counts")
   }
 
+  /** Three disjoint 100-id ingest batches and a fresh empty band index
+    * `idx`; returns a runner that processes them into a fresh corpus
+    * store and the store's path. */
+  private def threeIngestBatches(idx: String): (() => Unit, String) = {
+    import graft.operators.Dedup
+    val all = sources.Tables.read(spark, sf, "documents")
+      .select($"doc_id", $"text")
+    spark.sql(s"DROP TABLE IF EXISTS $idx")
+    Dedup.writeBandIndex(all.filter(lit(false)), "doc_id", "text", idx,
+      k = 8, rows = 2, nBuckets = 8)
+    val corpusPath = java.nio.file.Files
+      .createTempDirectory("graft-release-corpus").toString + "/docs"
+    val run = () => (0 until 3).foreach { i =>
+      streaming.IngestStream.processBatch(
+        all.filter($"doc_id" >= i * 100 && $"doc_id" < (i + 1) * 100),
+        i.toLong, idx, corpusPath, "doc_id", "text", 8, 2, 0.5, 8)
+    }
+    (run, corpusPath)
+  }
+
+  test("ingest micro-batches leave no checkpoint files or persistent RDDs") {
+    // under a reliable checkpoint dir (Graft.elasticityWith) every cut
+    // a batch takes — the probe's and `admitted` — writes rdd-* files;
+    // the batch's releasing scope must delete them and unpersist
+    val (run, corpusPath) = threeIngestBatches("ingest_release_idx")
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-release-ckpt")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    org.apache.spark.GraftTestShim.withCheckpointDir(sc, ckpt.toString)(run())
+    val rddDirs = java.nio.file.Files.walk(ckpt).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("rdd-"))
+    assert(rddDirs.isEmpty,
+      s"checkpoint files left behind: ${rddDirs.mkString(", ")}")
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "a micro-batch left a persistent RDD behind")
+    assert(spark.read.parquet(corpusPath).count() > 0)
+  }
+
+  test("streaming admission batches leave the session's cache set unchanged") {
+    // verify's candidate-shingle cache and the band caches are released
+    // per micro-batch: IngestStream (one probe per batch) and q193 (two)
+    val cached = () => org.apache.spark.GraftTestShim.cachedEntries(spark)
+    val (run, _) = threeIngestBatches("ingest_cache_idx")
+    val before = cached()
+    run()
+    assert(cached() == before, "IngestStream batches grew the cache set")
+    EventStreams.streamingAdmissionStream(spark, sf,
+      maxFilesPerTrigger = Some(1), deltaFiles = 3).count()
+    assert(cached() == before, "q193 micro-batches grew the cache set")
+  }
+
   test("streaming incremental rollup is micro-batch-boundary independent") {
     // Force one micro-batch PER FILE: the delta slice lands as many
     // part files, so the foreachBatch maintenance loop appends many
